@@ -212,26 +212,6 @@ object Dedup {
       .withColumn("h", conv(substring(md5($"sh"), 1, 7), 16, 10).cast("long"))
   }
 
-  /** doc_id + per-row array of distinct shingle hashes — signatures are
-    * per-document, so MinHash/SimHash need NO explode and NO shuffle:
-    * this keeps the whole signature computation a narrow map, which at
-    * 100 TB is the difference between zero shuffles and shuffling a
-    * 50×-multiplied shingle stream. Values are identical to the exploded
-    * form (array_distinct preserves the shingle SET).
-    */
-  private def shingleHashArr(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    // the fused kernels digest each shingle ONCE and consume the bytes
-    // directly — the r4 composed-HOF form (transform + md5 + substr +
-    // conv per derived column) was interpreted and allocated a hex
-    // string + BigInteger per shingle per column; forcing the full
-    // projection at sf0.1 measured ~4.6 s, the bulk of the d07 time the
-    // round-4 verdict flagged (Bench's count() prunes unused columns,
-    // which is why d04's bench number never showed it)
-    shingledDocs(s, dir)
-      .select($"doc_id", graft.functions.Md5Prefix28($"shs").as("hs"))
-  }
-
   /** docs → distinct 3-word shingle arrays (shared by both hash cores).
     * Shingle3 fuses sequence+transform+concat_ws+array_distinct into one
     * compiled kernel (fuzz-pinned to the composed form it replaces).

@@ -858,9 +858,6 @@ object Similarity {
         "THEN '1' ELSE '0' END"
     }.mkString(" || ")
 
-  private def withNorm(df: DataFrame): DataFrame =
-    df.withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-
   /** Exact top-k core, UNSORTED (s06 joins on this; a presentation
     * orderBy here would plan a useless range exchange in every consumer
     * — the round-2 lesson on composing registered queries).

@@ -1,7 +1,6 @@
 package graft.sink
 
 import java.util
-import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -19,9 +18,11 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** DataSource-v2 sink: `df.writeStream.format("kinesis-graft")` /
-  * `df.write.format("kinesis-graft")` — the v1 ergonomics layer over the
-  * same per-task [[KinesisRecordWriter]] data plane the foreachBatch
-  * adapter uses (SURVEY.md §7.2 component 3).
+  * `df.write.format("kinesis-graft")` — the v1 ergonomics layer over
+  * [[PartitionDelivery]], the same per-task delivery core the
+  * foreachBatch adapter runs (SURVEY.md §7.2 component 3). It rejects
+  * `dead_letter_path`: only KinesisSink.write and start commit a
+  * quarantine.
   *
   * Option surface mirrors the reference's Viper config
   * (/root/reference/utils.go:23-46, README.md:51-55) via
@@ -73,14 +74,8 @@ private final class KinesisGraftTable(schema: StructType)
   // (batchproducer.go:49-66).
   private[sink] val totals = new AtomicReference(WriteStats())
 
-  override def metrics(): util.Map[String, String] = {
-    val t = totals.get()
-    Map(
-      "recordsSent" -> t.recordsSent.toString,
-      "recordsDropped" -> t.recordsDropped.toString,
-      "kinesisErrors" -> t.kinesisErrors.toString,
-      "putRequests" -> t.putRequests.toString).asJava
-  }
+  override def metrics(): util.Map[String, String] =
+    WriteStats.names.zip(totals.get().values.map(_.toString)).toMap.asJava
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE,
       TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ).asJava
@@ -95,89 +90,71 @@ private final class KinesisGraftTable(schema: StructType)
     val hasStreamCol = s.fieldNames.contains("stream")
     require(hasStreamCol || opts.stream.isDefined,
       "kinesis-graft needs a 'stream' column or a 'stream' option")
-    new KinesisGraftWriteBuilder(s, opts, totals)
+    require(opts.deadLetterPath.isEmpty,
+      "kinesis-graft does not support dead_letter_path; KinesisSink.write " +
+        "and KinesisSink.start honour it (and replayDeadLetters re-sends it)")
+    val write = new KinesisGraftWrite(s, opts, totals)
+    new WriteBuilder { override def build(): Write = write }
   }
 }
 
-private final class KinesisGraftWriteBuilder(
-    schema: StructType, opts: KinesisSinkOptions,
-    totals: AtomicReference[WriteStats]) extends WriteBuilder {
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite =
-      new KinesisGraftBatchWrite(schema, opts, totals)
-    override def toStreaming: StreamingWrite =
-      new KinesisGraftStreamingWrite(schema, opts, totals)
-    override def supportedCustomMetrics(): Array[CustomMetric] =
-      GraftMetric.all
-  }
-}
-
-/** Declared sink metrics (driver side): Spark sums the per-task values. */
+/** Declared sink metrics: Spark sums the per-task values.
+  * Spark instantiates each class by name, so there is one per
+  * [[WriteStats]] counter, named by its position in [[WriteStats.names]].
+  */
 private object GraftMetric {
-  final class Sent extends CustomSumMetric {
-    override def name(): String = "recordsSent"
-    override def description(): String = "records delivered to Kinesis"
+  sealed abstract class Counter(i: Int, desc: String) extends CustomSumMetric {
+    override def name(): String = WriteStats.names(i)
+    override def description(): String = desc
   }
-  final class Dropped extends CustomSumMetric {
-    override def name(): String = "recordsDropped"
-    override def description(): String = "records dropped after retry caps"
-  }
-  final class Errors extends CustomSumMetric {
-    override def name(): String = "kinesisErrors"
-    override def description(): String = "PutRecords request failures"
-  }
-  final class Requests extends CustomSumMetric {
-    override def name(): String = "putRequests"
-    override def description(): String = "PutRecords requests issued"
-  }
+  final class Sent extends Counter(0, "records delivered to Kinesis")
+  final class Dropped extends Counter(1, "records dropped after retry caps")
+  final class Errors extends Counter(2, "PutRecords request failures")
+  final class Requests extends Counter(3, "PutRecords requests made")
+
   def all: Array[CustomMetric] =
     Array(new Sent, new Dropped, new Errors, new Requests)
 
-  def task(stats: WriteStats): Array[CustomTaskMetric] = Array(
-    metric("recordsSent", stats.recordsSent),
-    metric("recordsDropped", stats.recordsDropped),
-    metric("kinesisErrors", stats.kinesisErrors),
-    metric("putRequests", stats.putRequests))
-
-  private def metric(n: String, v: Long): CustomTaskMetric =
-    new CustomTaskMetric {
-      override def name(): String = n
-      override def value(): Long = v
-    }
+  def task(stats: WriteStats): Array[CustomTaskMetric] =
+    WriteStats.names.zip(stats.values).map { case (n, v) =>
+      new CustomTaskMetric {
+        override def name(): String = n
+        override def value(): Long = v
+      }
+    }.toArray[CustomTaskMetric]
 }
 
 private final case class GraftCommitMessage(stats: WriteStats)
     extends WriterCommitMessage
 
-private object GraftCommitMessage {
-  def addTo(totals: AtomicReference[WriteStats],
-      messages: Array[WriterCommitMessage]): Unit = {
+/** The one DSv2 write, batch and streaming. Each task commits its
+  * partition's stats; the job (or epoch) commit adds them to the table
+  * totals. By then every task has flushed, so the Flush-on-Close drain
+  * (sink.go:111-126) is implicit per epoch.
+  */
+private final class KinesisGraftWrite(
+    schema: StructType, opts: KinesisSinkOptions,
+    totals: AtomicReference[WriteStats])
+    extends Write with BatchWrite with StreamingWrite {
+  override def toBatch: BatchWrite = this
+  override def toStreaming: StreamingWrite = this
+  override def supportedCustomMetrics(): Array[CustomMetric] = GraftMetric.all
+  override def useCommitCoordinator(): Boolean = true
+
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
+    new GraftWriterFactory(schema, opts)
+  override def createStreamingWriterFactory(
+      info: PhysicalWriteInfo): StreamingDataWriterFactory =
+    new GraftWriterFactory(schema, opts)
+
+  override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val batch = messages.collect { case GraftCommitMessage(s) => s }
       .foldLeft(WriteStats())(_ + _)
     totals.updateAndGet(_ + batch)
   }
-}
-
-private final class KinesisGraftBatchWrite(
-    schema: StructType, opts: KinesisSinkOptions,
-    totals: AtomicReference[WriteStats]) extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new GraftWriterFactory(schema, opts)
-  override def commit(messages: Array[WriterCommitMessage]): Unit =
-    GraftCommitMessage.addTo(totals, messages)
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-private final class KinesisGraftStreamingWrite(
-    schema: StructType, opts: KinesisSinkOptions,
-    totals: AtomicReference[WriteStats]) extends StreamingWrite {
-  override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new GraftWriterFactory(schema, opts)
-  // Epoch commit: by the time tasks report, their records are flushed —
-  // the Flush-on-Close drain (sink.go:111-126) is implicit per epoch.
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    GraftCommitMessage.addTo(totals, messages)
+    commit(messages)
+  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
 }
 
@@ -191,60 +168,30 @@ private final class GraftWriterFactory(schema: StructType,
     new GraftDataWriter(schema, opts)
 }
 
-/** Per-task writer: routes rows to per-stream buffers (≤batchSize in
-  * memory per stream) and flushes through [[KinesisRecordWriter]] — the
-  * same O(streams · batchSize) task-memory bound as the foreachBatch
-  * path, so a 100 TB write is just more tasks, not more state.
+/** Per-task writer: hands each row to [[PartitionDelivery]]. Nothing
+  * is dead-lettered here (the table rejects `dead_letter_path`), so the
+  * core's drops are counted only.
   */
 private final class GraftDataWriter(schema: StructType,
     opts: KinesisSinkOptions) extends DataWriter[InternalRow] {
-  private val client = KinesisSinkOptions.resolveClient(opts)
   private val streamIdx = schema.fieldNames.indexOf("stream")
   private val pkIdx = schema.fieldNames.indexOf("partitionKey")
   private val dataIdx = schema.fieldNames.indexOf("data")
+  private val core = new PartitionDelivery(opts, _ => ())
 
-  private var stats = WriteStats()
-  private val writers = mutable.Map.empty[String, KinesisRecordWriter]
-  private val buffers =
-    mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[KinesisRecord]]
+  // By-name append fills absent nullable columns with nulls, so a query
+  // without a stream column arrives here as null: the core's null rule
+  // covers both.
+  private def string(row: InternalRow, i: Int): String =
+    if (i < 0 || row.isNullAt(i)) null else row.getUTF8String(i).toString
 
-  private def flush(stream: String): Unit = {
-    val buf = buffers(stream)
-    if (buf.nonEmpty) {
-      val w = writers.getOrElseUpdate(stream,
-        new KinesisRecordWriter(client, stream, opts.writer))
-      stats = stats + w.write(buf.iterator)
-      buf.clear()
-    }
-  }
+  override def write(row: InternalRow): Unit =
+    core.add(string(row, streamIdx), string(row, pkIdx), row.getBinary(dataIdx))
 
-  override def write(row: InternalRow): Unit = {
-    // NB: by-name append fills absent nullable columns with nulls, so a
-    // query without a stream column arrives here as null, not as a
-    // missing field — the option fallback must handle both.
-    val stream =
-      if (streamIdx >= 0 && !row.isNullAt(streamIdx))
-        row.getUTF8String(streamIdx).toString
-      else opts.stream.getOrElse(throw new IllegalArgumentException(
-        "record has null 'stream' and no default stream option is set"))
-    val pk =
-      if (pkIdx >= 0 && !row.isNullAt(pkIdx))
-        row.getUTF8String(pkIdx).toString
-      else util.UUID.randomUUID().toString // utils.go:15-19
-    val buf = buffers.getOrElseUpdate(stream,
-      new mutable.ArrayBuffer[KinesisRecord](opts.writer.batchSize))
-    buf += KinesisRecord(pk, row.getBinary(dataIdx))
-    if (buf.size >= opts.writer.batchSize) flush(stream)
-  }
-
-  override def commit(): WriterCommitMessage = {
-    buffers.keys.foreach(flush)
-    GraftCommitMessage(stats)
-  }
-
-  override def abort(): Unit = buffers.clear()
+  override def commit(): WriterCommitMessage = GraftCommitMessage(core.finish())
+  override def abort(): Unit = core.abort()
   override def close(): Unit = ()
 
   override def currentMetricsValues(): Array[CustomTaskMetric] =
-    GraftMetric.task(stats)
+    GraftMetric.task(core.stats)
 }

@@ -39,11 +39,21 @@ final case class WriteStats(
   def +(o: WriteStats): WriteStats = WriteStats(
     recordsSent + o.recordsSent, recordsDropped + o.recordsDropped,
     kinesisErrors + o.kinesisErrors, putRequests + o.putRequests)
+
+  /** The counters, in [[WriteStats.names]] order. */
+  def values: Seq[Long] = productIterator.collect { case v: Long => v }.toSeq
+}
+
+object WriteStats {
+  /** The counter names, in [[WriteStats.values]] order: the one list the
+    * `KinesisSink.Metrics` accumulators and the DSv2 metrics derive from.
+    */
+  val names: Seq[String] = WriteStats().productElementNames.toSeq
 }
 
 /** Async error reporting seam, mirroring the reference's `Events()`
-  * channel (/root/reference/sink.go:106-109, event.go:4-33). In the
-  * streaming sink this is fed into the `StreamingQueryListener` bus.
+  * channel (sink.go:106-109, event.go:4-33). Both sink adapters use
+  * [[PartitionDelivery]]'s listener, which logs each event as a WARN line.
   */
 trait KinesisEventListener extends Serializable {
   def onError(message: String): Unit

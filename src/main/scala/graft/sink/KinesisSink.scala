@@ -10,17 +10,19 @@ import org.apache.spark.sql.types.{BinaryType, StringType}
 import org.apache.spark.util.LongAccumulator
 
 /** The Kinesis sink, re-expressing the reference's `Sink` facade
-  * (/root/reference/sink.go) on Structured Streaming:
+  * (sink.go) on Structured Streaming:
   *
   *  - `Send(msg, topic)` (sink.go:66-77) → rows flowing through a
   *    streaming query; the topic is either a per-query `stream` option or
   *    a per-row `stream` column (dynamic routing — the per-topic producer
-  *    map becomes per-stream grouping inside each write task);
+  *    map becomes the per-stream buffers of [[PartitionDelivery]], the
+  *    delivery core each write task runs);
   *  - UUIDv4 partition keys sprayed per message (utils.go:15-19) →
-  *    `uuid()` projected when no partitionKey column exists;
+  *    `uuid()` projected when no partitionKey column exists, and minted
+  *    by the core for a null one;
   *  - the per-topic producer goroutine and its dual trigger
   *    (batchproducer.go:244-261) → micro-batch trigger supplies the time
-  *    axis, in-task chunking ≤500 supplies the size axis;
+  *    axis, the core's ≤`batchSize` buffers supply the size axis;
   *  - `Close()`'s flush-with-timeout (sink.go:111-126) → the final epoch
   *    commits before `stop()` returns (`spark.sql.streaming.stopTimeout`);
   *  - `Restart()` (sink.go:128-140) → restart the query on the same
@@ -36,22 +38,19 @@ object KinesisSink extends Logging {
   /** Task-summed delivery counters, mirroring `StatsBatch`
     * (batchproducer.go:58-66) — the per-interval snapshot becomes
     * monotonic accumulators the driver can diff per progress event.
+    * One accumulator per [[WriteStats]] counter, in the same order.
     */
-  final class Metrics private (
-      val recordsSent: LongAccumulator,
-      val recordsDropped: LongAccumulator,
-      val kinesisErrors: LongAccumulator,
-      val putRequests: LongAccumulator) extends Serializable
+  final class Metrics private (accs: Seq[LongAccumulator]) extends Serializable {
+    val Seq(recordsSent, recordsDropped, kinesisErrors, putRequests) = accs
+
+    private[sink] def add(s: WriteStats): Unit =
+      accs.lazyZip(s.values).foreach(_.add(_))
+  }
 
   object Metrics {
-    def register(spark: SparkSession, prefix: String = "graft.kinesis"): Metrics = {
-      val sc = spark.sparkContext
-      new Metrics(
-        sc.longAccumulator(s"$prefix.recordsSent"),
-        sc.longAccumulator(s"$prefix.recordsDropped"),
-        sc.longAccumulator(s"$prefix.kinesisErrors"),
-        sc.longAccumulator(s"$prefix.putRequests"))
-    }
+    def register(spark: SparkSession, prefix: String = "graft.kinesis"): Metrics =
+      new Metrics(WriteStats.names.map(n =>
+        spark.sparkContext.longAccumulator(s"$prefix.$n")))
   }
 
   /** Normalize any input frame to the wire schema
@@ -83,50 +82,25 @@ object KinesisSink extends Logging {
   final case class DeadLetterRow(stream: String, partitionKey: String,
       data: Array[Byte], reason: String)
 
-  /** Per-partition delivery core; returns the dead-lettered records
-    * (strictly — delivery completes before the iterator is handed
-    * back; the buffer holds only DROPPED records, bounded by the
-    * admission-bounded batch). Shared by both [[writeBatch]] actions.
+  /** Deliver one partition through [[PartitionDelivery]], yielding each
+    * flush's dead letters before the next row is pulled: the quarantine
+    * leg is bounded like the buffers, not by the partition. The
+    * partition's stats reach `m` once, after its last flush.
     */
-  private def deliverPartition(rows: Iterator[Row], o: KinesisSinkOptions,
+  private[sink] def deliver(rows: Iterator[Row], o: KinesisSinkOptions,
       m: Metrics): Iterator[DeadLetterRow] = {
-    val client = KinesisSinkOptions.resolveClient(o)
-    val listener: KinesisEventListener = new KinesisEventListener {
-      override def onError(msg: String): Unit = logWarning(s"kinesis-sink: $msg")
-    }
-    val dropped = mutable.ArrayBuffer.empty[DeadLetterRow]
-    val writers = mutable.Map.empty[String, KinesisRecordWriter]
-    val buffers = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[KinesisRecord]]
-    def flush(stream: String): Unit = {
-      val buf = buffers(stream)
-      if (buf.nonEmpty) {
-        val w = writers.getOrElseUpdate(stream,
-          new KinesisRecordWriter(client, stream, o.writer, listener,
-            deadLetter = (r, why) =>
-              dropped += DeadLetterRow(stream, r.partitionKey, r.data, why)))
-        val stats = w.write(buf.iterator)
-        m.recordsSent.add(stats.recordsSent)
-        m.recordsDropped.add(stats.recordsDropped)
-        m.kinesisErrors.add(stats.kinesisErrors)
-        m.putRequests.add(stats.putRequests)
-        buf.clear()
-      }
-    }
-    rows.foreach { r =>
-      val stream = r.getString(0)
-      val buf = buffers.getOrElseUpdate(stream,
-        new mutable.ArrayBuffer[KinesisRecord](o.writer.batchSize))
-      buf += KinesisRecord(r.getString(1), r.getAs[Array[Byte]](2))
-      if (buf.size >= o.writer.batchSize) flush(stream)
-    }
-    buffers.keys.foreach(flush)
-    dropped.iterator
+    val ready = mutable.Queue.empty[DeadLetterRow]
+    val core = new PartitionDelivery(o, ready.enqueue(_))
+    def drain() = if (ready.isEmpty) Iterator.empty else ready.removeAll().iterator
+    rows.flatMap { r =>
+      core.add(r.getString(0), r.getString(1), r.getAs[Array[Byte]](2))
+      drain()
+    } ++ { m.add(core.finish()); drain() } // by name: runs after the last row
   }
 
-  /** Write one (micro-)batch. Runs one [[KinesisRecordWriter]] flush per
-    * stream per partition; per-stream buffers hold at most `batchSize`
-    * rows, so task memory is O(streams · batchSize) regardless of
-    * partition size.
+  /** Write one (micro-)batch: each partition runs [[deliver]], so task
+    * memory is the core's O(streams · batchSize) regardless of partition
+    * size.
     *
     * With `dead_letter_path` configured, the SAME delivery pass runs as
     * a `mapPartitions` whose action is a parquet append of the
@@ -143,11 +117,11 @@ object KinesisSink extends Logging {
     o.deadLetterPath match {
       case None =>
         wire.foreachPartition { rows: Iterator[Row] =>
-          deliverPartition(rows, o, m).foreach(_ => ()) // drops counted only
+          deliver(rows, o, m).foreach(_ => ()) // drops counted only
         }
       case Some(path) =>
         import org.apache.spark.sql.Encoders
-        wire.mapPartitions(rows => deliverPartition(rows, o, m))(
+        wire.mapPartitions(rows => deliver(rows, o, m))(
             Encoders.product[DeadLetterRow])
           .write.mode("append").parquet(path)
     }

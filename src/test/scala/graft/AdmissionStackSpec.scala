@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.ops.{AnnIndex, DedupIndex}
 
 /** The full production ADMISSION STACK, composed from the written

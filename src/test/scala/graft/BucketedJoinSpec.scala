@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 /** Bucketing demo for the 100 TB posture (SCALE.md): writing both join

@@ -63,7 +63,6 @@ class DedupSpec extends SparkTestBase {
 
   test("d12: contamination ratios are bounded and exact eval copies " +
       "surface at ratio 1") {
-    import org.apache.spark.sql.functions._
     val d12 = ops.Dedup.queries("d12_decontamination")(spark, sfVerify)
       .collect()
     assert(d12.length == 20)
@@ -177,7 +176,6 @@ class DedupSpec extends SparkTestBase {
 
   test("d09 skew guard: star candidates stay linear in bucket occupancy " +
       "(all-pairs would be quadratic)") {
-    import spark.implicits._
     // Deliberately skewed fixture: one band value holding 500 docs (a
     // boilerplate near-dup cluster flooding its LSH bucket) plus a
     // handful of healthy buckets.

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 import graft.ops.{AnnIndex, HybridIndex, Similarity, TextIndex}
 
 /** Hybrid retrieval from artifacts only (HybridIndex.search): the

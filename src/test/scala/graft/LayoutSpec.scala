@@ -82,7 +82,6 @@ class LayoutSpec extends SparkTestBase {
   }
 
   test("zorder64 matches the composed bit-ops form and known values") {
-    import spark.implicits._
     // known: a-bits go to even positions, b-bits to odd
     val known = Seq((0L, 0L, 0L), (3L, 1L, 7L), (1L, 0L, 1L), (0L, 1L, 2L),
       (0xFFFFFFFFL, 0L, 0x5555555555555555L),
@@ -157,7 +156,6 @@ class LayoutSpec extends SparkTestBase {
 
   test("p23: the scan-fraction curve says what the layouts must say — " +
       "each single sort prunes its own axis only, z-order prunes both") {
-    import spark.implicits._
     val rows = SparkEntry.queries("p23_layout_scan_fraction")(
         spark, sfVerify)
       .collect()

@@ -102,7 +102,6 @@ class MultimodalSpec extends SparkTestBase {
 
   test("m05 dedup accounting: distinct ≤ total, pHash buckets bounded " +
       "by 2^8 and by media count, occupancy covers the corpus") {
-    import spark.implicits._
     val rows = multimodal.Multimodal
       .queries("m05_media_dedup")(spark, sfVerify).collect()
     rows.foreach { r =>
@@ -119,7 +118,6 @@ class MultimodalSpec extends SparkTestBase {
 
   test("m05 skew guard: near-dup candidates stay linear in a flooded " +
       "pHash bucket (d09's star reduction, all-pairs would be quadratic)") {
-    import spark.implicits._
     // Planted flood: one (png, ph=00000000) bucket holding 300 DISTINCT
     // contents (the perceptual-near-dup burst case — same pHash,
     // different bytes), plus healthy sparse buckets and exact-dup
@@ -149,7 +147,6 @@ class MultimodalSpec extends SparkTestBase {
 
   test("m07 shard-plan invariants: contiguous shards, conserved bytes, " +
       "disjoint ascending id ranges, prefix-sum binning semantics") {
-    import spark.implicits._
     val Budget = 4096L // mirror of Multimodal.MediaShardBytes
     val plan = SparkEntry.queries("m07_media_shard_plan")(spark, sfVerify)
       .collect()

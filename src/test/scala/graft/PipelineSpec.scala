@@ -147,7 +147,6 @@ class PipelineSpec extends SparkTestBase {
 
   test("p10: weights normalize, the budget is conserved to rounding, " +
       "epochs recompute, and α=1/2 tempers toward uniform") {
-    import spark.implicits._
     val p10 = ops.Pipeline.queries("p10_domain_mixture")(spark, sfSmoke)
       .collect()
     val nSrc = p10.length

@@ -126,8 +126,6 @@ class RelationalSpec extends SparkTestBase {
 
   test("q36: the broadcast-scalar DataFrame form equals the scalar-" +
       "subquery SQL form Catalyst decorrelates, and the cutoff bites") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
     val got = SparkEntry.queries("q36_sales_opportunity")(spark, sfVerify)
       .collect().toSeq
     assert(got.nonEmpty)

@@ -123,7 +123,6 @@ class SaltedAggSpec extends SparkTestBase {
   test("cardDir (r15): the decision read back from a persisted skew " +
       "card equals the live sizing decision; results are identical " +
       "through the card path; a missing axis fails loudly") {
-    import spark.implicits._
     val d = tmpDir("salt-card-spec")
     val p = 8L
     Events.skewCardFor(events, Seq(

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** The range-partitioned sorted-shard export pattern — how a curated
   * corpus actually leaves the engine at 100 TB: `repartitionByRange` on
   * the sort key + `sortWithinPartitions` + parquet write gives globally

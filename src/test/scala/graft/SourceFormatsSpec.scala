@@ -13,7 +13,6 @@ import org.apache.spark.sql.functions._
 class SourceFormatsSpec extends SparkTestBase {
 
   test("JSON-lines round trip preserves every row and column") {
-    import spark.implicits._
     val dir = tmpDir("jsonl") + "/docs"
     val src = Tables.load(spark, sfVerify, "documents")
     src.write.mode("overwrite").json(dir)
@@ -25,7 +24,6 @@ class SourceFormatsSpec extends SparkTestBase {
   }
 
   test("CSV round trip with quoting preserves every row and column") {
-    import spark.implicits._
     val dir = tmpDir("csv") + "/docs"
     val src = Tables.load(spark, sfVerify, "documents")
     // text contains spaces only (word soup), but quote/escape anyway —
@@ -41,7 +39,6 @@ class SourceFormatsSpec extends SparkTestBase {
   }
 
   test("corrupt JSON lines are quarantined, not silently dropped") {
-    import spark.implicits._
     val dir = tmpDir("badjson")
     val f = new java.io.File(dir, "part-0.json")
     val w = new java.io.PrintWriter(f, "UTF-8")

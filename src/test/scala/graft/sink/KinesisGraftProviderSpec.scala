@@ -121,5 +121,23 @@ class KinesisGraftProviderSpec extends SparkTestBase {
     val messages = Iterator.iterate(e2: Throwable)(_.getCause)
       .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
     assert(messages.contains("no default stream option"), messages)
+    // dead_letter_path is honoured by KinesisSink.write/start only; the
+    // DSv2 write rejects it instead of dropping records silently ...
+    val fake = FakeKinesis.named("dsv2-dlq")
+    fake.clear()
+    val withDlq = Map("aws_region_name" -> "r", "stream" -> "dlq-topic",
+      "client" -> "fake:dsv2-dlq", "dead_letter_path" -> tmpDir("dsv2-dlq"))
+    val e3 = intercept[IllegalArgumentException] {
+      noStream.write.format("kinesis-graft").options(withDlq)
+        .mode("append").save()
+    }
+    assert(e3.getMessage.contains("KinesisSink.write") &&
+      e3.getMessage.contains("KinesisSink.start"), e3.getMessage)
+    assert(fake.stored("dlq-topic").isEmpty, "no task may run")
+    // ... while the source read path still accepts the shared options
+    noStream.write.format("kinesis-graft").options(withDlq - "dead_letter_path")
+      .mode("append").save()
+    assert(spark.read.format("kinesis-graft").options(withDlq).load()
+      .select(col("data").cast("string")).as[String].collect().toSeq == Seq("x"))
   }
 }

@@ -237,6 +237,25 @@ class KinesisSinkSpec extends SparkTestBase {
     assert(KinesisSink.replayDeadLetters(spark, opts).recordsSent.value == 0)
   }
 
+  test("dead-letter leg is bounded: a flush's dead letters are yielded " +
+      "before the next batch of input is pulled") {
+    FakeKinesis.named("dlq4").clear()
+    val o = KinesisSinkOptions.fromMap(Map(
+      "aws_region_name" -> "us-east-1", "stream" -> "topic-h",
+      "client" -> "fake:dlq4", "batch_size" -> "10",
+      "max_attempts_per_record" -> "1"))
+    val m = KinesisSink.Metrics.register(spark)
+    var pulled = 0
+    val rows = Iterator.tabulate(100) { i =>
+      pulled += 1
+      Row(null, "fail", s"x$i".getBytes("UTF-8"))
+    }
+    val dead = KinesisSink.deliver(rows, o, m)
+    assert(dead.hasNext && pulled <= 10,
+      s"the first dead letter waited for $pulled input rows")
+    assert(dead.size == 100 && m.recordsDropped.value == 100)
+  }
+
   test("sink option validation fails fast (batchproducer.go:143-153)") {
     intercept[IllegalArgumentException] {
       KinesisSinkOptions.fromMap(Map("stream" -> "s")) // region missing
